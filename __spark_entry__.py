@@ -364,8 +364,10 @@ def q_jaccard_on_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clustering: LSH candidate pairs -> connected components
-    (hash-min label propagation) -> (doc_id, cluster_id). The step
-    between "pairs found" and "keep one doc per group"."""
+    -> (doc_id, cluster_id), cluster_id the minimum member doc_id. The
+    step between "pairs found" and "keep one doc per group". The
+    components come from one exact union-find task, which accepts up to
+    ``dedup.UNION_FIND_MAX_EDGES`` candidate pairs."""
     from oblate_spark.operators.dedup import duplicate_clusters, lsh_candidate_pairs
 
     d = _read(spark, sf_dir, "documents")
@@ -2017,10 +2019,12 @@ def _sql_duplicate_phash(n_rows: int) -> str:
 
 def q_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full image-dedup chain the north rule implies: banded phash
-    LSH pairs -> hash-min connected components -> (image_id,
-    cluster_id). The planted hot clique must come out as ONE cluster
-    labelled by its minimum member; XOR pairs come out as 2-clusters.
-    Oracle: brute-force pairs + recursive-CTE label walk in DuckDB."""
+    LSH pairs -> connected components -> (image_id, cluster_id). The
+    planted hot clique must come out as ONE cluster labelled by its
+    minimum member; XOR pairs come out as 2-clusters. Components come
+    from one exact union-find task, which accepts up to
+    ``dedup.UNION_FIND_MAX_EDGES`` pairs. Oracle: brute-force pairs +
+    recursive-CTE label walk in DuckDB."""
     from oblate_spark.fixtures import PHASH_BITS, build_phash_df
     from oblate_spark.operators.dedup import (
         duplicate_clusters,
@@ -3689,7 +3693,7 @@ def oracle_sql() -> dict[str, str]:
                          6)
             FROM cs
         """,
-        "pattern_ratio_events_props": """
+        "pattern_ratio_events_props": r"""
             SELECT count(props)::BIGINT AS n_nonnull,
                    count(CASE WHEN regexp_matches(props, '^\{"k": \d+\}$')
                               THEN 1 END)::BIGINT AS n_matching,

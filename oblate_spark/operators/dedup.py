@@ -1,8 +1,9 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH (shingle -> minhash -> band ->
-bucket-join), SimHash, and n-gram Jaccard — all pure DataFrame
-expressions (JVM-side, codegen'd; no Python UDFs anywhere).
+bucket-join), SimHash, and n-gram Jaccard — pure DataFrame expressions
+(JVM-side, codegen'd), apart from the Arrow kernels of the exhaustive
+twins and the union-find task of ``duplicate_clusters``.
 
 Design choice for cross-engine verifiability: hash primitives are
 ``md5`` over explicit strings (identical bytes in any engine), and
@@ -23,7 +24,10 @@ Scale notes:
   cluster), which is exactly what AQE skew-split handles.
 * ngram_jaccard_pairs — O(n²) verification is applied only to LSH
   candidates at scale (``pairs`` argument); the exhaustive variant is
-  for small oracles/tests.
+  for small oracles/tests. It and embedding_near_duplicates' exhaustive
+  variant refuse more than ``ALL_PAIRS_MAX_ROWS`` input rows.
+* duplicate_clusters — one exact union-find task over all edges, at
+  most ``UNION_FIND_MAX_EDGES`` of them.
 """
 
 from __future__ import annotations
@@ -187,7 +191,8 @@ def ngram_jaccard_pairs(
 
     With ``pairs`` (e.g. LSH candidates) the join is pair-driven — the
     scale path. Without it, an exhaustive self-join (small inputs /
-    oracle checks only; quadratic by construction).
+    oracle checks only; quadratic by construction; more than
+    ``ALL_PAIRS_MAX_ROWS`` rows raise ``ValueError``).
     """
     df = ensure_fanout_parallelism(df)  # single-file inputs -> parallel join sides
     toks = df.select(F.col(id_col), _token_set(F.col(text_col)).alias("toks"))
@@ -202,6 +207,33 @@ def ngram_jaccard_pairs(
             F.col("jaccard") >= threshold
         )
     return _jaccard_all_pairs_kernel(toks, id_col=id_col, threshold=threshold)
+
+
+# Row bound on the one driver collect of each exhaustive twin
+# (``ngram_jaccard_pairs`` / ``embedding_near_duplicates`` without
+# ``pairs=``); past it the quadratic twin is the wrong path, so the
+# input is refused instead of collected. The registered queries that
+# feed them read the test tables at any scale factor: at sf0.1
+# ``jaccard_pairs_documents`` feeds 5,000 documents and
+# ``embedding_near_dup`` 4,000 vectors (2,000 embeddings, doubled). If
+# the tables keep growing linearly in the scale factor (documents grow
+# 10x from sf0.01 to sf0.1), the two queries raise above about sf0.4
+# and sf0.5 respectively.
+ALL_PAIRS_MAX_ROWS = 20_000
+
+
+def _collect_all_pairs_side(df: DataFrame, op: str) -> list:
+    """The exhaustive twin's broadcast side, collected with at most
+    ``ALL_PAIRS_MAX_ROWS`` rows on the driver; more rows raise."""
+    rows = df.limit(ALL_PAIRS_MAX_ROWS + 1).collect()
+    if len(rows) > ALL_PAIRS_MAX_ROWS:
+        raise ValueError(
+            f"{op} without pairs= is the exhaustive all-pairs path, bounded "
+            f"to {ALL_PAIRS_MAX_ROWS} input rows; this input has more. Pass "
+            "candidate pairs= (e.g. from lsh_candidate_pairs or "
+            "ivf_bucket_candidate_pairs) for the scale path."
+        )
+    return rows
 
 
 def _jaccard_all_pairs_kernel(
@@ -222,13 +254,18 @@ def _jaccard_all_pairs_kernel(
     poisons ``array_intersect``) and are skipped here.
 
     The broadcast side (id, token-set bitsets) is the exhaustive twin's
-    documented bounded materialization; the scale path is ``pairs=``."""
+    documented bounded materialization (``ALL_PAIRS_MAX_ROWS``); the
+    scale path is ``pairs=``."""
     import numpy as np
     import pandas as pd
 
     id_dtype = toks.schema[id_col].dataType.simpleString()
     spark = toks.sparkSession
-    rows = [(r[0], r[1]) for r in toks.collect() if r[1] is not None]
+    rows = [
+        (r[0], r[1])
+        for r in _collect_all_pairs_side(toks, "ngram_jaccard_pairs")
+        if r[1] is not None
+    ]
     vocab: dict[str, int] = {}
     for _, ts in rows:
         for t in ts:
@@ -467,7 +504,8 @@ def embedding_near_duplicates(
     production path is unchanged: pass LSH/IVF candidate ``pairs`` and
     the join stays linear; that path now hoists the per-vector norms out
     of the per-pair expression (computed once per row instead of once
-    per candidate pair).
+    per candidate pair). Without ``pairs``, more than
+    ``ALL_PAIRS_MAX_ROWS`` rows raise ``ValueError``.
     """
     from .similarity import dot_expr, norm_expr
 
@@ -538,15 +576,18 @@ def _embedding_all_pairs_kernel(
     All arithmetic is the fold-order numpy of :func:`_fold_gram` /
     :func:`_fold_norms` — bit-identical to the Column expression.
 
-    The one bounded driver materialization (the broadcast side) is the
-    exhaustive twin's contract: the operator is documented
-    small-input/oracle-only; the scale path is ``pairs=``."""
+    The one bounded driver materialization (the broadcast side, at most
+    ``ALL_PAIRS_MAX_ROWS`` rows) is the exhaustive twin's contract: the
+    operator is documented small-input/oracle-only; the scale path is
+    ``pairs=``."""
     import numpy as np
     import pandas as pd
 
     id_dtype = df.schema[id_col].dataType.simpleString()
     spark = df.sparkSession
-    rows = df.select(F.col(id_col), F.col(vec_col)).collect()
+    rows = _collect_all_pairs_side(
+        df.select(F.col(id_col), F.col(vec_col)), "embedding_near_duplicates"
+    )
     by_len: dict[int, tuple] = {}
     tmp: dict[int, list] = {}
     for r in rows:
@@ -615,104 +656,123 @@ def _embedding_all_pairs_kernel(
     return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
+# Most edges ``duplicate_clusters`` accepts: its one union-find task
+# holds every edge in one Python worker. Measured kernel memory (4-core
+# x86 host, pyarrow 16, numpy 1.26; 2M random edges, each from a node to
+# one of its 20 successors): ~125 B per edge of working set for bigint
+# and 20-char string ids alike, on top of the input batches themselves
+# (16 B per edge for bigint ids, 40 B for 20-char strings). At the bound
+# that is 280-330 MB in the worker; the kernel took 0.9 s (bigint) /
+# 2.7 s (string). The largest registered input is ~7k pairs.
+UNION_FIND_MAX_EDGES = 2_000_000
+
+
+def _min_id_components(a, b, n: int):
+    """Component label of nodes 0..n-1 for undirected edges (a[i], b[i]):
+    the minimum node index of its component. Hook-and-compress: every
+    round hooks the larger root of each cross-tree edge under the smaller
+    one, then pointer-jumps every node to its root. Parents only ever
+    point to smaller indices, so there are no cycles and each root is the
+    minimum of its tree; edges inside one tree are dropped after each
+    round, and the loop ends when no edge crosses two trees."""
+    import numpy as np
+
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            return parent
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _union_find_kernel(batches, *, max_edges: int):
+    """``mapInArrow`` body over ALL edges (one partition): (src, dst) ->
+    (id, cluster_id). More than ``max_edges`` edges raise ``ValueError``
+    before any work. Ids stay Arrow values end to end (a pandas round
+    trip would turn a bigint column with NULLs into float64). Nodes are
+    the sorted distinct non-NULL endpoints, so a node's index order is
+    its id order (Arrow sorts strings bytewise, as Spark's ``min`` does)
+    and the minimum index of a component is its minimum id. An edge with
+    a NULL end connects nothing, its other end is still a node, and a
+    NULL endpoint yields one ``(NULL, NULL)`` row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kept, n_edges = [], 0
+    for batch in batches:
+        n_edges += batch.num_rows
+        if n_edges > max_edges:
+            raise ValueError(
+                f"duplicate_clusters labels components in one task, bounded "
+                f"to {max_edges} pairs (UNION_FIND_MAX_EDGES); this input has "
+                "more. Reduce the candidate pairs, e.g. with a stricter "
+                "similarity threshold."
+            )
+        kept.append(batch)
+    if not kept:
+        return
+    edges = pa.Table.from_batches(kept)
+    src, dst = edges.column("src"), edges.column("dst")
+    ends = pa.chunked_array(src.chunks + dst.chunks, type=src.type)
+    nodes = pc.unique(ends.drop_null())
+    nodes = nodes.take(pc.sort_indices(nodes))
+    both = pc.and_(src.is_valid(), dst.is_valid())
+    a = pc.index_in(src.filter(both), value_set=nodes).to_numpy()
+    b = pc.index_in(dst.filter(both), value_set=nodes).to_numpy()
+    root = _min_id_components(a, b, len(nodes))
+    yield pa.RecordBatch.from_arrays(
+        [nodes, nodes.take(pa.array(root))], names=["id", "cluster_id"]
+    )
+    if ends.null_count:
+        null = pa.nulls(1, type=src.type)
+        yield pa.RecordBatch.from_arrays([null, null], names=["id", "cluster_id"])
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     *,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over duplicate/candidate pairs: (id,
     cluster_id) where cluster_id is the minimum member id — the step a
     real dedup pipeline needs between "pairs found" and "keep one doc
     per group".
 
-    Algorithm: hash-min label propagation — every node repeatedly takes
-    the min label among itself and its neighbors; converges in
-    O(component diameter) rounds (near-dup clusters are dense, diameter
-    is typically 2-3). Scale properties: the iteration runs over the
-    PAIR PARTICIPANTS only (a small fraction of the corpus); each round
-    is one join + one combinable groupBy(min); ``localCheckpoint`` cuts
-    the lineage so plans don't grow with rounds. For graphs with huge
-    diameters (paths), large-star/small-star would halve the rounds —
-    not needed for dedup blocking output.
+    One exact union-find (:func:`_union_find_kernel`) in a single
+    ``mapInArrow`` task over ``edges.repartition(1)``, then
+    ``localCheckpoint``: one shuffle, no driver collect, no iteration in
+    Spark, exact for any graph shape (chains included). The task holds
+    every edge, so more than ``UNION_FIND_MAX_EDGES`` pairs fail the
+    query with a ``ValueError`` naming the bound.
 
     Only ids appearing in ``pairs`` are returned (singletons are their
-    own trivial cluster by definition).
-
-    Convergence is established only by a quiet round (no label changed),
-    so the loop needs headroom: propagation that is still changing
-    labels on round ``max_iter`` raises rather than returning possibly
-    split components — raise ``max_iter`` for chain-shaped graphs.
+    own trivial cluster by definition). A pair with a NULL end connects
+    nothing: its other end is its own cluster unless other pairs join
+    it, and NULL ends yield one ``(NULL, NULL)`` row.
     """
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # no distinct: hash-min's MIN aggregation is idempotent to duplicate
-    # edges, so deduplicating them bought nothing but a full extra
-    # shuffle+aggregate of the edge list every run (round 6)
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-    )
-    def _step(cur: DataFrame) -> DataFrame:
-        nbr_min = (
-            edges.join(cur, edges["src"] == cur["id"])
-            .groupBy(edges["dst"].alias("id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        # the old label is already on the join — carry a per-row change
-        # flag instead of re-joining old vs new labels afterwards
-        return (
-            cur.alias("l")
-            .join(nbr_min.alias("n"), "id", "left")
-            .select(
-                F.col("id"),
-                F.least(
-                    F.col("l.cluster_id"),
-                    F.coalesce(F.col("n.nbr_min"), F.col("l.cluster_id")),
-                ).alias("cluster_id"),
-                (
-                    F.coalesce(F.col("n.nbr_min"), F.col("l.cluster_id"))
-                    < F.col("l.cluster_id")
-                ).alias("__changed"),
-            )
-        )
+    # both ends in the one type a union of the two columns coerces them to
+    id_type = edges.union(edges.select("dst", "src")).schema["src"].dataType
+    name = id_type.simpleString()
+    max_edges = UNION_FIND_MAX_EDGES
 
-    converged = False
-    for _ in range(max_iter):
-        # TWO hash-min propagations per materialization (round 6): the
-        # per-round cost on converging graphs is job latency, not data
-        # volume, so composing two label-update joins into one
-        # localCheckpoint + one convergence probe halves the job count.
-        # Labels decrease monotonically to the component min, so a quiet
-        # SECOND step (__changed all false) is a fixed point regardless
-        # of what the first step did — the same convergence test as
-        # before, with doubled headroom per max_iter unit.
-        new_labels = _step(_step(labels).drop("__changed")).localCheckpoint(
-            eager=True
-        )
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
-        labels = new_labels.drop("__changed")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # truncated propagation is NOT converged output: a chain-shaped
-        # component with diameter > max_iter would be silently split
-        # into multiple cluster_ids (and keep_canonical would keep
-        # several "canonical" docs from one group). Raise so callers can
-        # rerun with a higher max_iter — never return wrong labels.
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds; the labels would split components with larger diameter. "
-            "Re-run with a higher max_iter."
-        )
-    return labels
+    def kernel(batches):
+        return _union_find_kernel(batches, max_edges=max_edges)
+
+    return (
+        edges.select(F.col("src").cast(id_type), F.col("dst").cast(id_type))
+        .repartition(1)
+        .mapInArrow(kernel, f"id {name}, cluster_id {name}")
+        .localCheckpoint(eager=True)
+    )
 
 
 def keep_canonical(

@@ -14,7 +14,8 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")), app_name="oblate_spark_tests")
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = get_spark(cores=cores, app_name="oblate_spark_tests")
     yield s
 
 

@@ -6,6 +6,7 @@ a failed round even if the library itself is healthy."""
 from __future__ import annotations
 
 import os
+import warnings
 
 import duckdb
 import pytest
@@ -51,3 +52,28 @@ def test_query_runs(spark, name):
 def test_oracle_parses_and_runs(duck, name):
     rel = duck.sql(entrymod.oracle_sql()[name])
     rel.fetchall()
+
+
+def test_pattern_ratio_oracle_text_is_unchanged():
+    """The regex oracle is a raw string (``'\\{'`` is an invalid escape
+    in a plain literal); its text must stay byte-identical."""
+    want = (
+        "\n            SELECT count(props)::BIGINT AS n_nonnull,\n"
+        "                   count(CASE WHEN regexp_matches(props, '^\\{\"k\": \\d+\\}$')\n"
+        "                              THEN 1 END)::BIGINT AS n_matching,\n"
+        "                   round(count(CASE WHEN regexp_matches(props,\n"
+        "                                        '^\\{\"k\": \\d+\\}$')\n"
+        "                               THEN 1 END)::DOUBLE\n"
+        "                         / count(props)::DOUBLE, 6) AS ratio\n"
+        "            FROM events\n        "
+    )
+    assert entrymod.oracle_sql()["pattern_ratio_events_props"] == want
+
+
+def test_entry_module_compiles_without_warnings():
+    path = entrymod.__file__
+    with open(path) as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(src, path, "exec")

@@ -114,6 +114,26 @@ def test_embedding_near_duplicates(spark):
     assert pairs == {(1, 2)}
 
 
+def test_jaccard_exhaustive_twin_refuses_inputs_past_row_bound(docs, monkeypatch):
+    monkeypatch.setattr(dedup, "ALL_PAIRS_MAX_ROWS", 5)
+    out = dedup.ngram_jaccard_pairs(docs, id_col="doc_id", text_col="text", threshold=0.7)
+    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in out.collect()}  # 5 rows: at the bound
+    monkeypatch.setattr(dedup, "ALL_PAIRS_MAX_ROWS", 4)
+    with pytest.raises(ValueError, match="pairs="):
+        dedup.ngram_jaccard_pairs(docs, id_col="doc_id", text_col="text", threshold=0.7)
+
+
+def test_embedding_exhaustive_twin_refuses_inputs_past_row_bound(spark, monkeypatch):
+    rows = [(i, [1.0, float(i)]) for i in range(4)]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    monkeypatch.setattr(dedup, "ALL_PAIRS_MAX_ROWS", 4)
+    out = dedup.embedding_near_duplicates(df, id_col="id", vec_col="embedding", threshold=0.0)
+    assert out.count() == 6  # 4 rows: at the bound, all 4*3/2 pairs
+    monkeypatch.setattr(dedup, "ALL_PAIRS_MAX_ROWS", 3)
+    with pytest.raises(ValueError, match="pairs="):
+        dedup.embedding_near_duplicates(df, id_col="id", vec_col="embedding", threshold=0.0)
+
+
 def test_language_id_and_quality(docs):
     langs = {r["doc_id"]: r["lang_pred"] for r in text.language_id(docs, id_col="doc_id", text_col="text").collect()}
     assert langs[1] == "en" and langs[5] == "de"
@@ -2018,6 +2038,110 @@ def test_phash_dup_clusters_hot_clique_is_one_cluster(spark):
     hot = [f"img_{i:012d}" for i in range(0, 1200, 101)]
     labels = {got[h] for h in hot}
     assert labels == {hot[0]}
+
+
+def test_duplicate_clusters_integer_ids(spark):
+    pairs = spark.createDataFrame(
+        [(10, 3), (3, 7), (7, 10), (-5, 2**40), (2**40, 99), (8, 8)],
+        "id_a bigint, id_b bigint",
+    )
+    got = dedup.duplicate_clusters(pairs)
+    assert got.dtypes == [("id", "bigint"), ("cluster_id", "bigint")]
+    assert {(r["id"], r["cluster_id"]) for r in got.collect()} == {
+        (3, 3), (7, 3), (10, 3), (-5, -5), (2**40, -5), (99, -5), (8, 8)
+    }
+
+
+def test_duplicate_clusters_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "id_a string, id_b string")
+    got = dedup.duplicate_clusters(pairs)
+    assert got.dtypes == [("id", "string"), ("cluster_id", "string")]
+    assert got.collect() == []
+
+
+def test_duplicate_clusters_null_endpoint(spark):
+    # a NULL end connects nothing: "x" stays its own cluster, the NULL
+    # shows up once as (NULL, NULL)
+    pairs = spark.createDataFrame(
+        [("x", None), ("b", "a"), (None, "c")], "id_a string, id_b string"
+    )
+    got = dedup.duplicate_clusters(pairs).collect()
+    assert {(r["id"], r["cluster_id"]) for r in got} == {
+        ("x", "x"), ("a", "a"), ("b", "a"), ("c", "c"), (None, None)
+    }
+
+
+def test_duplicate_clusters_long_chain(spark):
+    """A chain of diameter 40 is one component labelled by its minimum;
+    label propagation would need a round per hop."""
+    pairs = spark.createDataFrame(
+        [(i + 1, i) for i in range(40)], "id_a bigint, id_b bigint"
+    )
+    got = dedup.duplicate_clusters(pairs)
+    assert {(r["id"], r["cluster_id"]) for r in got.collect()} == {
+        (i, 0) for i in range(41)
+    }
+
+
+def test_duplicate_clusters_refuses_more_edges_than_the_bound(spark, monkeypatch):
+    pairs = spark.createDataFrame(
+        [(i + 1, i) for i in range(4)], "id_a bigint, id_b bigint"
+    )
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 3)
+    with pytest.raises(Exception, match="UNION_FIND_MAX_EDGES"):
+        dedup.duplicate_clusters(pairs)
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 4)
+    assert dedup.duplicate_clusters(pairs).count() == 5
+
+
+def test_union_find_kernel_matches_sequential_union_find():
+    """The single-task kernel against a plain sequential union-find on
+    random graphs (bigint and string ids, NULL ends, several batches)."""
+    import numpy as np
+    import pyarrow as pa
+
+    def reference(src, dst):
+        parent = {}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for s, d in zip(src, dst):
+            for v in (s, d):
+                parent.setdefault(v, v)
+            if s is not None and d is not None:
+                rs, rd = find(s), find(d)
+                parent[max(rs, rd)] = min(rs, rd)
+        return {(v, None if v is None else find(v)) for v in parent}
+
+    rng = np.random.default_rng(7)
+    for case in range(60):
+        n, m = int(rng.integers(1, 40)), int(rng.integers(1, 60))
+        ends = rng.integers(0, n, (2, m)).tolist()
+        if case % 2:
+            ends = [[f"d{v}" for v in side] for side in ends]
+        else:
+            ends = [[v * 7919 - 10**12 for v in side] for side in ends]
+        for side in ends:
+            for pos in rng.integers(0, m, int(rng.integers(0, 3))):
+                side[pos] = None
+        id_type = pa.string() if case % 2 else pa.int64()
+        schema = pa.schema([("src", id_type), ("dst", id_type)])
+        cut = m // 2
+        batches = [
+            pa.RecordBatch.from_pydict(
+                {"src": ends[0][lo:hi], "dst": ends[1][lo:hi]}, schema=schema
+            )
+            for lo, hi in ((0, cut), (cut, m))
+        ]
+        got = set()
+        for out in dedup._union_find_kernel(iter(batches), max_edges=m):
+            got |= set(zip(out.column(0).to_pylist(), out.column(1).to_pylist()))
+        assert got == reference(*ends), case
+        with pytest.raises(ValueError, match="bounded to"):
+            list(dedup._union_find_kernel(iter(batches), max_edges=m - 1))
 
 
 def test_mad_outlier_profile(spark):
